@@ -86,6 +86,16 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def _shuffle_width(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int. A
+    non-numeric value (``"auto"`` on AQE-managed platforms) falls back
+    to the context's default parallelism instead of raising."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def out_degree(edges: DataFrame) -> DataFrame:
     """Out-degree per source, counting duplicate edges (the reference
     divides by the full outlink-list length, duplicates included:
@@ -211,7 +221,7 @@ def pagerank(
     # partitions re-joined 10x), =false coalesces 600k rows to ONE
     # task (serializing the scatter join).
     if num_partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        cap = _shuffle_width(spark)
         est_bytes = _plan_size_bytes(edges)
         if est_bytes is None:
             # Private stats surface unavailable (Spark internals moved):
@@ -753,9 +763,7 @@ def hits(
     copies. Measured 62 s → ~6 s for 10 iterations at sf0.1.
     """
     spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = num_partitions or _shuffle_width(spark)
     e = edges.select("src", "dst").persist()  # ONE source scan
     vertices = (
         e.select(F.col("src").alias("url"))
@@ -897,9 +905,7 @@ def label_propagation(
     if n_rounds < 0:
         raise ValueError(f"n_rounds ({n_rounds}) must be non-negative")
     spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = num_partitions or _shuffle_width(spark)
     e = edges.select("src", "dst").persist()
     vertices = (
         e.select(F.col("src").alias("url"))
@@ -1012,9 +1018,7 @@ def triangle_counts(
     (persist/unpersist) stays with the caller.
     """
     spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = num_partitions or _shuffle_width(spark)
     owns_canon = canon is None
     canon_str = (
         edges.filter(F.col("src") != F.col("dst"))
@@ -1378,9 +1382,7 @@ def sssp_weighted(
     if not sources:
         raise ValueError("sources must be non-empty")
     spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = num_partitions or _shuffle_width(spark)
     e = (
         edges.select("src", "dst", F.col(weight_col).cast("double").alias("__w"))
         .repartition(nparts, "src")
@@ -1540,9 +1542,7 @@ def bipartite_projection(
     # (profiled: a 10-task 3.2 s expansion stage writing the 154 MB
     # pair shuffle; the join's exchange is replaced by this one, not
     # added). A/B min-of-3 warm at sf0.1: 5.26 -> 2.82 s.
-    nparts = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = _shuffle_width(edges.sparkSession)
     ded = ded.repartition(nparts, "dst").persist()
     a = ded.select(F.col("dst").alias("__r"), F.col("src").alias("a"))
     b = ded.select(F.col("dst").alias("__r"), F.col("src").alias("b"))

@@ -27,10 +27,16 @@ column expressions — no UDFs, fully inside WholeStageCodegen:
 
 Scale notes (100 TB posture):
 - tokenize is explode(split(...)): narrow, no shuffle; codegen'd.
-- the only shuffles are the groupBys on (doc_id, word) and (word); both
-  get map-side partial aggregation automatically.
-- the df-per-word table is tiny relative to the corpus → Catalyst/AQE
-  broadcasts it into the tf join (no shuffle of the big side).
+- tf_idf (the full table) shuffles on (doc_id, word) and (word); both
+  get map-side partial aggregation automatically. The df-per-word
+  table is tiny relative to the corpus → Catalyst/AQE broadcasts it
+  into the tf join (no shuffle of the big side).
+- search_ranked (the jar's TF → TF-IDF → Search → Rank chain) never
+  builds that table: it reads the corpus ONCE, keeps only the
+  query-term tokens, pivots their counts into one per-doc aggregate
+  and takes every term's df from a broadcast 1-row aggregate of that
+  frame (the plan shape bm25_search uses) — one tokenize pass, one
+  corpus shuffle of query-term tokens only.
 - search terms are a literal IN-list (semi-join semantics), pushed into
   the scan when reading a materialized tf-idf table.
 """
@@ -38,6 +44,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import functools
+import operator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -110,17 +117,18 @@ def tf_idf(docs: DataFrame, total_docs: int | None = None, **tok_kwargs) -> Data
     scan+tokenize the corpus — Catalyst column-prunes the df branch's
     aggregate (it needs only distinct (doc, word), not the count), so
     the two exchanges canonicalize DIFFERENTLY and exchange reuse
-    cannot merge them. This is the deliberate trade: the single-scan
-    alternatives all concentrate a hot word's full postings in one
-    task (df via a window over word = no partial aggregation; df via
-    collect_list = a multi-GB row for a stopword), which at 100 TB is
-    a straggler/OOM, not a win — the second scan is columnar,
-    pruned, and embarrassingly parallel. bm25_search avoids the
-    rescan only because its term list is finite (pivoted columns);
-    an unbounded vocabulary has no such pivot. Callers who amortize
-    (run many searches over one corpus) should materialize this
-    table once — ``search`` over a parquet-backed tf-idf pushes the
-    IN-list to the scan.
+    cannot merge them. This is the deliberate trade for the FULL
+    table: the single-scan alternatives all concentrate a hot word's
+    full postings in one task (df via a window over word = no partial
+    aggregation; df via collect_list = a multi-GB row for a stopword),
+    which at 100 TB is a straggler/OOM, not a win — the second scan is
+    columnar, pruned, and embarrassingly parallel. A finite query
+    never pays it: search_ranked and bm25_search pivot their term list
+    into columns of one aggregate and read the corpus once; an
+    unbounded vocabulary has no such pivot. Callers who amortize (run
+    many searches over one corpus) should materialize this table once
+    — ``search`` over a parquet-backed tf-idf pushes the IN-list to
+    the scan.
     """
     return _tf_idf_with_df(docs, total_docs, **tok_kwargs).drop("df")
 
@@ -169,6 +177,44 @@ def ranked(scored: DataFrame, k: int | None = None, score_col: str = "score") ->
     return out
 
 
+def _term_pivot(
+    tok: DataFrame, terms: list[str], doc_aggs: tuple = (), row_aggs: tuple = ()
+) -> DataFrame:
+    """The shared plan of the retrieval scorers: ONE per-doc aggregate
+    of ``tok`` with each query term's count pivoted into a column
+    ``__tf<i>`` (beside ``doc_aggs``), cross-joined with a broadcast
+    1-row aggregate of that same frame holding each term's document
+    frequency ``__df<i>`` (beside ``row_aggs``, which may read the
+    per-doc columns). The 1-row side reuses the per-doc aggregate's
+    exchange, so the corpus is scanned and shuffled once, and no join
+    remains but the 1-row broadcast. Keeps docs matching >= 1 term.
+
+    ``terms`` must be non-empty and duplicate-free. The pivot makes the
+    aggregate 1 + |doc_aggs| + |terms| columns wide: right for
+    query-shaped term lists (tens of terms), not for hundred-term
+    batches (wide rows beat a second scan well past that, but revisit
+    the row form if terms outgrow a broadcast row).
+    """
+    agg = tok.groupBy("doc_id").agg(
+        *doc_aggs,
+        *[
+            F.sum(F.when(F.col("word") == t, 1).otherwise(0)).alias(f"__tf{i}")
+            for i, t in enumerate(terms)
+        ],
+    )
+    row = agg.agg(
+        *row_aggs,
+        *[
+            F.sum((F.col(f"__tf{i}") > 0).cast("int")).alias(f"__df{i}")
+            for i in range(len(terms))
+        ],
+    )
+    matched = functools.reduce(
+        operator.or_, [F.col(f"__tf{i}") > 0 for i in range(len(terms))]
+    )
+    return agg.filter(matched).crossJoin(F.broadcast(row))
+
+
 def search_ranked(
     docs: DataFrame,
     terms: list[str],
@@ -178,8 +224,44 @@ def search_ranked(
 ) -> DataFrame:
     """O28 job-chain composition: TF → TF-IDF → search → rank as one
     lazy lineage (the jar materializes text files between each job;
-    the engine materializes nothing)."""
-    return ranked(search(tf_idf(docs, total_docs, **tok_kwargs), terms), k)
+    the engine materializes nothing) → ``(doc_id, score)``, the scores
+    of ``ranked(search(tf_idf(docs, ...), terms), k)`` up to float
+    summation order:
+
+        score(d) = sum_t (1 + log10 tf_t(d)) * log10(1 + N/df_t)
+
+    over the terms ``d`` contains. Terms match the lowercased tokens
+    exactly (Search$Map @89 ``String.equals``; a capitalised term
+    matches nothing), a repeated term counts once, and an empty term
+    list gives an empty frame.
+
+    ONE corpus pass: only the query-term tokens survive the tokenize,
+    their per-doc counts pivot into columns of one ``groupBy(doc_id)``
+    and each term's df comes from a broadcast 1-row aggregate of that
+    frame (``_term_pivot``, bm25_search's plan), so the corpus is never
+    tokenized twice the way tf_idf's tf and df branches are. The score
+    is one column expression summed in ``terms``-list order
+    (deterministic, unlike the groupBy sum of ``search``). The pivot
+    bounds the query at tens of terms. ``tests/test_plans.py`` pins the
+    executed shape.
+    """
+    tok_kwargs.setdefault("lowercase", True)
+    terms = list(dict.fromkeys(terms))
+    tok = tokenize(docs, **tok_kwargs)
+    if not terms:
+        return tok.select("doc_id", F.lit(0.0).alias("score")).limit(0)
+    if total_docs is None:
+        total_docs = docs.count()
+    n = F.lit(float(total_docs))
+    scored = _term_pivot(tok.filter(F.col("word").isin(terms)), terms)
+
+    def part(i: int):
+        tf = F.col(f"__tf{i}")
+        tfidf = (F.lit(1.0) + F.log10(tf)) * F.log10(F.lit(1.0) + n / F.col(f"__df{i}"))
+        return F.when(tf > 0, tfidf).otherwise(F.lit(0.0))
+
+    score = functools.reduce(operator.add, [part(i) for i in range(len(terms))])
+    return ranked(scored.select("doc_id", score.alias("score")), k)
 
 
 def bm25_search(
@@ -213,12 +295,10 @@ def bm25_search(
     removes the branches instead of hoping). avgdl and every term's df
     then fall out of ONE 1-row aggregate of that frame (broadcast,
     never a collect), and the score is a pure column expression — no
-    joins at all after the agg. ``tests/test_plans.py`` pins the
-    executed shape: one Generate(explode) in the final adaptive plan,
-    no SortMergeJoin. The pivot bounds the agg width at 2 + |terms|
-    columns: right for query-shaped term lists (tens), not for
-    hundred-term batches (wide rows beat a second scan well past that,
-    but revisit the row form if terms outgrow a broadcast row).
+    joins at all after the agg. ``_term_pivot`` builds this plan, and
+    states its tens-of-terms bound, for both retrieval scorers;
+    ``tests/test_plans.py`` pins the executed shape: one
+    Generate(explode) in the final adaptive plan, no SortMergeJoin.
 
     The score sums parts in ``terms``-list order as one left-to-right
     column expression — DETERMINISTIC float addition (the round-7 form
@@ -235,20 +315,11 @@ def bm25_search(
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("bm25_search needs at least one query term")
-    tok = tokenize(docs, **tok_kwargs)
-    agg = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dl"),
-        *[
-            F.sum(F.when(F.col("word") == t, 1).otherwise(0)).alias(f"__tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    stats = agg.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("__avgdl"),
-        *[
-            F.sum((F.col(f"__tf{i}") > 0).cast("int")).alias(f"__df{i}")
-            for i in range(len(terms))
-        ],
+    scored = _term_pivot(
+        tokenize(docs, **tok_kwargs),
+        terms,
+        doc_aggs=(F.count(F.lit(1)).alias("dl"),),
+        row_aggs=((F.sum("dl").cast("double") / F.count(F.lit(1))).alias("__avgdl"),),
     )
     n = F.lit(float(total_docs))
 
@@ -263,17 +334,8 @@ def bm25_search(
             tf > 0, idf * (tf * F.lit(k1 + 1.0)) / denom
         ).otherwise(F.lit(0.0))
 
-    score = part(0)
-    for i in range(1, len(terms)):
-        score = score + part(i)
-    matched = functools.reduce(
-        lambda a, b: a | b, [F.col(f"__tf{i}") > 0 for i in range(len(terms))]
-    )
-    return (
-        agg.filter(matched)
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", score.alias("score"))
-    )
+    score = functools.reduce(operator.add, [part(i) for i in range(len(terms))])
+    return scored.select("doc_id", score.alias("score"))
 
 
 def chunk_documents(

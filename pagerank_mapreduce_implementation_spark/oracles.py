@@ -182,7 +182,7 @@ def exact_dedup_sql() -> str:
         "SELECT doc_id, fingerprint, "
         "min(doc_id) OVER (PARTITION BY fingerprint) AS keeper, "
         "CAST(doc_id <> min(doc_id) OVER (PARTITION BY fingerprint) AS INT) AS is_dup "
-        "FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g')))) "
+        "FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
         "AS fingerprint FROM documents)"
     )
 
@@ -1469,8 +1469,8 @@ def line_dedup_sql() -> str:
         "unnest(string_split(text, chr(10))) AS line, "
         "unnest(range(len(string_split(text, chr(10))))) AS idx "
         "FROM staged), "
-        "keyed AS (SELECT doc_id, idx, md5(lower(trim(line))) AS k "
-        "FROM lines WHERE len(trim(line)) >= 1), "
+        "keyed AS (SELECT doc_id, idx, md5(lower(trim(line, ' '))) AS k "
+        "FROM lines WHERE len(trim(line, ' ')) >= 1), "
         "ranked AS (SELECT doc_id, idx, row_number() OVER "
         "(PARTITION BY k ORDER BY doc_id, idx) AS rn FROM keyed), "
         "dropped AS (SELECT doc_id, idx FROM ranked WHERE rn > 1) "
@@ -1504,7 +1504,7 @@ def intra_doc_line_dedup_sql(sep: str = " ", min_line_chars: int = 1) -> str:
         f"WITH s AS (SELECT doc_id, text, string_split(text, '{s}') AS ls "
         "FROM documents), "
         "k AS (SELECT doc_id, text, ls, list_transform(ls, x -> CASE "
-        f"WHEN len(trim(x)) >= {m} THEN md5(lower(trim(x))) END) AS ks "
+        f"WHEN len(trim(x, ' ')) >= {m} THEN md5(lower(trim(x, ' '))) END) AS ks "
         "FROM s), "
         "f AS (SELECT doc_id, text, ls, list_filter(ls, (x, i) -> "
         "ks[i] IS NULL OR list_position(ks, ks[i]) = i) AS kept FROM k) "

@@ -941,6 +941,57 @@ def test_line_dedup_matches_duckdb_oracle(spark):
     assert sum(n for _, n in got.values()) > 0  # the corpus has real dups
 
 
+def test_dedup_oracles_trim_ascii_space_only(spark):
+    """Spark's F.trim strips only the ASCII space, so text that differs
+    only by an edge U+00A0 keeps its own key in exact_dedup, line_dedup
+    and intra_doc_line_dedup. The DuckDB oracles must trim exactly ' '
+    to agree: DuckDB's bare trim() strips Unicode whitespace too."""
+    import duckdb
+
+    from pyspark.sql import functions as F
+
+    from pagerank_mapreduce_implementation_spark import oracles
+
+    nb = "\u00a0"
+    # one line of <= 10 tokens per doc: line_dedup_sql's 10-token line
+    # staging leaves each text as it is
+    texts = [
+        "cookie banner",
+        nb + "cookie banner",
+        "cookie banner" + nb,
+        "cookie " + nb + "cookie",
+    ]
+    docs = _docs_of(spark, *texts)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany(
+        "INSERT INTO documents VALUES (?, ?)", [(i + 1, t) for i, t in enumerate(texts)]
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = rows(dedup.exact_dedup(docs))
+    assert [r[3] for r in got] == [0, 0, 0, 0]  # four distinct fingerprints
+    assert got == sorted(con.execute(oracles.exact_dedup_sql()).fetchall())
+
+    lined = dedup.line_dedup(docs).select(
+        "doc_id", F.md5("text").alias("text_md5"), "n_dropped_lines"
+    )
+    got = rows(lined)
+    assert [r[2] for r in got] == [0, 0, 0, 0]
+    assert got == sorted(con.execute(oracles.line_dedup_sql()).fetchall())
+
+    intra = dedup.intra_doc_line_dedup(docs, sep=" ").select(
+        "doc_id", F.md5("text").alias("text_md5"), "n_dropped_lines"
+    )
+    got = rows(intra)
+    assert [r[2] for r in got] == [0, 0, 0, 0]  # "cookie" != nb + "cookie"
+    assert got == sorted(
+        con.execute(oracles.intra_doc_line_dedup_sql(sep=" ")).fetchall()
+    )
+
+
 def test_semdedup_basic_rules(spark):
     """Cluster-bounded semantic dedup on a hand-built geometry: two
     tight clusters along axes e1 and e2, n_cells=2 splits them; the

@@ -807,3 +807,21 @@ def test_pagerank_tol_early_exit_matches_fixed_point(spark):
         assert abs(fixed[u] - early[u]) < 1e-8
     with _pt.raises(ValueError, match="tol"):
         pagerank(edges, tol=0.0)
+
+
+def test_shuffle_width_falls_back_on_non_numeric_conf(spark):
+    """A non-numeric shuffle width ("auto" on AQE-managed platforms)
+    falls back to the default parallelism instead of raising."""
+    from types import SimpleNamespace
+
+    from pagerank_mapreduce_implementation_spark.operators.graph import _shuffle_width
+
+    def session(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert _shuffle_width(session("auto")) == 7
+    assert _shuffle_width(session("12")) == 12
+    assert _shuffle_width(spark) == int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -485,6 +485,25 @@ def test_bm25_single_scan_single_corpus_shuffle(spark, sf_dir):
     assert ("ReusedExchange" in final) or ("ReusedQueryStage" in final)
 
 
+def test_search_ranked_single_scan_reuses_aggregate(spark, sf_dir):
+    """search_ranked (the jar's TF -> TF-IDF -> Search -> Rank chain)
+    pivots the query-term counts into one per-doc aggregate: the
+    EXECUTED adaptive plan tokenizes the corpus exactly once, never
+    sort-merge joins, and the per-term df row reads that aggregate's
+    exchange rather than rescanning the corpus."""
+    from pagerank_mapreduce_implementation_spark.operators import text
+    from pagerank_mapreduce_implementation_spark.sources.catalog import Catalog
+
+    df = text.search_ranked(
+        Catalog(spark, sf_dir).documents, entrymod.SEARCH_TERMS, k=10
+    )
+    assert df.collect()  # AQE finalizes the plan only on execution
+    final = plan_of(df).split("+- == Initial Plan ==")[0]
+    assert final.count("Generate explode") == 1
+    assert "SortMergeJoin" not in final and "CartesianProduct" not in final
+    assert ("ReusedExchange" in final) or ("ReusedQueryStage" in final)
+
+
 def test_substring_runs_window_keyed_by_pair_and_diagonal(spark, sf_dir):
     """substring_dedup's gaps-and-islands window partitions by
     (doc_a, doc_b, diagonal) — candidate-volume-sized — never by a
